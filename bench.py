@@ -599,9 +599,8 @@ def frontier_bench(
     (cfg.frontier_mode='mor'; what 'auto' — the default — picks in
     the large-frontier/low-churn regime) the frontier WRITE cost is
     O(churn), not O(|frontier|) — the full-rewrite layout rewrites the
-    unscheduled majority verbatim every epoch, and the sharded layout
-    degenerates to full whenever every host-shard sees scheduling
-    activity (this exact shape — measured).  Legs in the default artifact: mor vs full at the big
+    unscheduled majority verbatim every epoch.  Legs in the default
+    artifact: mor vs full at the big
     frontier (I/O + wall + digest match) and mor at a 4x-smaller
     frontier (write-side flatness vs |frontier|).  Honest note: the
     per-epoch politeness rank still SCANS the full frontier
@@ -687,93 +686,10 @@ def frontier_bench(
             "epochs": epochs,
             "epoch_ms": epoch_ms,
             "steady_epoch_ms": int(sum(steady) / len(steady)),
-            "frontier_write_mb": write_mb,
+            "write_mb": write_mb,
             "steady_write_mb": round(sum(write_mb[1:]) / len(write_mb[1:]), 2),
             "frontier_sizes": sizes,
             "scheduled": sched,
-            "schedule_digest": hex(int(total) & 0xFFFFFFFFFFFFFFFF),
-        }
-    finally:
-        shutil.rmtree(wd, ignore_errors=True)
-        spark.stop()
-
-
-def fwrite_ab_bench(cores: int, sph: int = 10000, tokens: int = 1000,
-                    epochs: int = 7) -> dict:
-    """cfg.frontier_write A/B as a PAIRED SAME-JVM alternating-epoch
-    comparison at the 640k standing-frontier / 1k-budget shape (the
-    regime where the unscheduled majority dominates the commit):
-    "rank" (legacy — the losers∪delayed side outputs of a persisted
-    full-frontier rank become the next frontier) vs "antijoin" (the
-    default — keep = frontier minus the disallow predicate minus a
-    broadcast anti-join on the scheduled url_keys; no full-frontier
-    window/sort/persist anywhere in the epoch).  run_epoch re-reads
-    the mutable config, and both derivations commit row-identical
-    snapshots, so alternation is state-compatible; every rank epoch
-    is ratioed against its adjacent antijoin epochs inside the same
-    drift window.  Pattern: antijoin (warmup, excluded), then
-    rank/antijoin alternating.  Digest over the first 6 epochs must
-    equal the full_640k leg's (same shape, same schedule)."""
-    from spider_man_spark.config import CrawlConfig
-    from spider_man_spark.plans.job import CrawlJob
-    from spider_man_spark.session import get_spark
-    from spider_man_spark.sources.corpus import make_corpus
-
-    spark = get_spark(
-        f"bench-fwriteab-{cores}", master=f"local[{cores}]",
-        shuffle_partitions=64,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    corpus = make_corpus(spark, **CRAWL).repartition(64, "url").cache()
-    corpus.count()
-    wd = tempfile.mkdtemp(prefix="bench_fwriteab_")
-    try:
-        job = CrawlJob(
-            spark,
-            CrawlConfig(
-                workdir=wd, tokens_per_epoch=tokens,
-                max_epochs=epochs + 2, rank_salts=8,
-                frontier_mode="full",
-            ),
-            corpus=corpus,
-        )
-        job.insert_requests_df(
-            _seed_df(spark, CRAWL["n_hosts"], sph)
-        )
-        spark.range(256).repartition(128).mapInPandas(
-            lambda it: it, schema="id long"
-        ).count()
-        epoch_ms, pattern = [], []
-        for i in range(epochs):
-            legacy = i % 2 == 1
-            job.cfg.frontier_write = "rank" if legacy else "antijoin"
-            pattern.append(job.cfg.frontier_write)
-            r = job.step()
-            epoch_ms.append(r.durations_ms["epoch"])
-        from pyspark.sql import functions as F
-
-        seen = job.store.read_deltas("seen", min(6, epochs))
-        total = seen.select(
-            F.sum(F.xxhash64("epoch", "url_key").cast("decimal(38,0)"))
-            .alias("d")
-        ).first().d
-        ratios = []
-        for i in range(1, epochs):
-            if pattern[i] != "rank":
-                continue
-            for j in (i - 1, i + 1):
-                if 1 <= j < epochs and pattern[j] == "antijoin":
-                    ratios.append(round(epoch_ms[i] / epoch_ms[j], 3))
-        ratios.sort()
-        med = ratios[len(ratios) // 2] if ratios else None
-        return {
-            "protocol": "paired same-JVM alternating epochs",
-            "seeds": CRAWL["n_hosts"] * sph,
-            "tokens": tokens,
-            "pattern": pattern,
-            "epoch_ms": epoch_ms,
-            "rank_over_antijoin_ratios": ratios,
-            "rank_overhead_factor_median": med,
             "schedule_digest": hex(int(total) & 0xFFFFFFFFFFFFFFFF),
         }
     finally:
@@ -1463,9 +1379,6 @@ def main() -> None:
     if len(sys.argv) == 4 and sys.argv[1] == "--bloom-ab-leg":
         print(json.dumps(bloom_ab_bench(int(sys.argv[2]), sys.argv[3])))
         return
-    if len(sys.argv) == 3 and sys.argv[1] == "--fwrite-ab-leg":
-        print(json.dumps(fwrite_ab_bench(int(sys.argv[2]))))
-        return
     if len(sys.argv) in (5, 6, 7) and sys.argv[1] == "--frontier-leg":
         kw = {}
         if len(sys.argv) >= 6:
@@ -1544,8 +1457,8 @@ def main() -> None:
         )
         result["ann"] = json.loads(out.stdout.strip().splitlines()[-1])
 
-    # frontier write-path evidence (sharded O(churn) commits vs full
-    # rewrite; 10x frontier-to-budget ratio) — default-on, 3 short legs
+    # frontier write-path evidence (MOR O(churn) commits vs full
+    # rewrite; 10x frontier-to-budget ratio) — default-on, short legs
     if os.environ.get("SPARK_GRAFT_FRONTIER", "1") != "0":
         import subprocess
 
@@ -1585,19 +1498,6 @@ def main() -> None:
             # stay flat (bounded read-assembly across cycles)
             "mor_chain_640k": _fleg("mor", 10000, 13, 4),
         }
-        # frontier_write rank-vs-antijoin paired same-JVM A/B at the
-        # same 640k shape — the commit-derivation cost in isolation
-        fw_out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--fwrite-ab-leg", str(cpus)],
-            capture_output=True, text=True, check=True,
-            env={**os.environ,
-                 "SPARK_DRIVER_MEM": os.environ.get(
-                     "SPARK_DRIVER_MEM", "32g")},
-        )
-        result["frontier"]["fwrite_ab_640k"] = json.loads(
-            fw_out.stdout.strip().splitlines()[-1]
-        )
 
     # scaling evidence is part of the DEFAULT artifact (round-2 verdict:
     # the claim must be machine-checkable from BENCH_r{N}.json)
@@ -1717,14 +1617,6 @@ def main() -> None:
                 ),
                 "epoch_ms": mc["epoch_ms"],
             }
-        if "fwrite_ab_640k" in fb:
-            fw = fb["fwrite_ab_640k"]
-            compact["frontier"]["fwrite_ab"] = {
-                "rank_overhead_factor": fw["rank_overhead_factor_median"],
-                "digest_match_vs_full": (
-                    fw["schedule_digest"] == off["schedule_digest"]
-                ),
-            }
         if "auto_4m2" in fb:
             au, fu = fb["auto_4m2"], fb["full_4m2"]
             compact["frontier"]["auto_4m2"] = {
@@ -1741,8 +1633,8 @@ def main() -> None:
                 ),
                 "epoch_ms_auto": au["epoch_ms"],
                 "epoch_ms_full": fu["epoch_ms"],
-                "write_mb_auto": au["frontier_write_mb"],
-                "write_mb_full": fu["frontier_write_mb"],
+                "write_mb_auto": au["write_mb"],
+                "write_mb_full": fu["write_mb"],
                 "io_ratio_full_over_auto": round(
                     fu["steady_write_mb"] / max(au["steady_write_mb"], 0.01),
                     1,

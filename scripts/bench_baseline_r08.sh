@@ -36,7 +36,6 @@ leg f_mor_160k    python3 bench.py --frontier-leg "$SPARK_GRAFT_CPUS" mor 2500
 leg f_auto_4m2    python3 bench.py --frontier-leg "$SPARK_GRAFT_CPUS" auto 65600 5
 leg f_full_4m2    python3 bench.py --frontier-leg "$SPARK_GRAFT_CPUS" full 65600 5
 leg f_mor_chain   python3 bench.py --frontier-leg "$SPARK_GRAFT_CPUS" mor 10000 13 4
-leg f_fwrite_ab   python3 bench.py --fwrite-ab-leg "$SPARK_GRAFT_CPUS"
 
 CP=/dev/shm/bench_r08_scale_corpus/corpus
 rm -rf /dev/shm/bench_r08_scale_corpus; mkdir -p /dev/shm/bench_r08_scale_corpus

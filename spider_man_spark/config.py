@@ -95,10 +95,9 @@ class CrawlConfig:
     bloom_enabled: bool = False
     bloom_shards: int = 64
     bloom_shard_bits: int = 1 << 22
-    # Partitioning: host-hash salt shards for skew defusal.
-    # NOTE: keep stable for the lifetime of a workdir — the sharded
-    # frontier layout keys its per-shard files on host_salt values
-    # computed with this fan-out.
+    # Host-hash shard fan-out, stored per frontier row as host_salt.
+    # No state layout keys on it, so a change mid-workdir only mixes
+    # fan-outs in that stored column.
     n_host_shards: int = 32
     # Frontier commit strategy — the knob that decides whether a
     # bounded-budget crawl over a 10^10-URL frontier pays O(churn) or
@@ -113,7 +112,7 @@ class CrawlConfig:
     #             latency — a win only once the avoided write dwarfs
     #             it (the 10^10 regime), so small crawls keep the
     #             rewrite.  Mixed layouts are first-class: the reader
-    #             resolves any interleaving of full/sharded/MOR dirs.
+    #             resolves any interleaving of full and MOR dirs.
     #   "mor"     always merge-on-read deltas, the Iceberg MOR
     #             posture: each epoch writes only the entering rows
     #             (retries + admitted) and the leaving url_keys
@@ -123,44 +122,19 @@ class CrawlConfig:
     #             unconditionally; periodic compaction (compact_every)
     #             folds deltas into a new base.  Requires dedup=True
     #             (tombstones assume frontier url_keys are unique).
-    #   "sharded" shard-selective snapshot rewrite: only host-shards
-    #             whose membership changed are rewritten.  Only wins
-    #             when scheduling activity is shard-sparse (long-tail
-    #             politeness-throttled crawls); with a budget spread
-    #             over every host, all shards are dirty and it
-    #             degenerates to a slower full rewrite (bench-measured).
-    #   "full"    the original full-snapshot rewrite each epoch.
+    #   "full"    the full-snapshot rewrite each epoch.  With dedup on
+    #             (unique url_keys) the kept rows are the frontier
+    #             minus the disallow predicate minus a bounded-
+    #             broadcast anti-join on the scheduled url_keys — no
+    #             full-frontier window, sort or persist.  With
+    #             dedup=False the frontier may hold duplicate keys, so
+    #             the kept rows are the rank-losers ∪ delayed side
+    #             outputs of a persisted full-frontier rank instead
+    #             (the anti-join would drop unscheduled copies of a
+    #             scheduled key).
     frontier_mode: str = "auto"
     frontier_mor_min_rows: int = 4_000_000
     frontier_mor_max_churn: float = 0.25
-    # How the full/sharded commit derives next-epoch frontier rows:
-    #   "auto"     (default) "antijoin" below frontier_mor_min_rows,
-    #              "rank" at or above it.  Measured basis (paired
-    #              same-JVM A/B): the two are wall-neutral at a 640k
-    #              frontier (ratio 0.999-1.011), but at 4.2M rows the
-    #              rank's persisted frontier turns the commit into a
-    #              cache scan while the anti-join pays a second full
-    #              scan+join (rank/antijoin 0.848) — and a large
-    #              frontier in a non-MOR mode means the user opted
-    #              out of MOR (or churn is high), exactly the regime
-    #              where the persist pays for itself.
-    #   "antijoin" keep = frontier minus the disallow predicate minus
-    #              a bounded-broadcast anti-join on the scheduled
-    #              url_keys.  No full-frontier window, sort or
-    #              MEMORY_AND_DISK rank persist anywhere in the epoch
-    #              — the rank computes only its WindowGroupLimit-
-    #              pruned winners.  Row-identical to "rank" ({picked,
-    #              losers, delayed, disallowed} partitions the
-    #              frontier).
-    #   "rank"     legacy dual-output rank: losers ∪ delayed side
-    #              outputs of a persisted full-frontier rank.  Also
-    #              what dedup=False crawls use regardless of this
-    #              setting — the anti-join assumes unique url_keys
-    #              (with duplicates it would drop unscheduled copies
-    #              of a scheduled key that the rank kept as losers).
-    # (MOR commits never write the unscheduled rows, so this knob is
-    # irrelevant there.)
-    frontier_write: str = "auto"
     # Churn-volume MOR compaction triggers, checked after every epoch
     # alongside the epoch-count trigger (compact_every).  At the
     # 10^10 design point the RIGHT trigger is accumulated delta
@@ -269,21 +243,16 @@ def validate_settings(cfg: CrawlConfig) -> None:
         raise SettingsError("max_retries must be >= 0")
     if cfg.n_host_shards < 1 or cfg.bloom_shards < 1 or cfg.rank_salts < 1:
         raise SettingsError("shard/salt counts must be >= 1")
-    if cfg.frontier_mode not in ("auto", "mor", "sharded", "full"):
+    if cfg.frontier_mode not in ("auto", "mor", "full"):
         raise SettingsError(
-            f"frontier_mode must be 'auto', 'mor', 'sharded' or 'full' "
+            f"frontier_mode must be 'auto', 'mor' or 'full' "
             f"(got {cfg.frontier_mode!r})"
-        )
-    if cfg.frontier_write not in ("auto", "antijoin", "rank"):
-        raise SettingsError(
-            f"frontier_write must be 'auto', 'antijoin' or 'rank' "
-            f"(got {cfg.frontier_write!r})"
         )
     if cfg.frontier_mode == "mor" and not cfg.dedup:
         raise SettingsError(
             "frontier_mode='mor' requires dedup=True: leave tombstones "
             "assume frontier url_keys are unique, which only the "
-            "seen-set dedup guarantees — use 'sharded' or 'full'"
+            "seen-set dedup guarantees — use 'auto' or 'full'"
         )
     for name, fn in cfg.callbacks.items():
         if name not in LIFECYCLE_HOOKS:

@@ -102,6 +102,10 @@ def host_salt(host: Column, n_shards: int) -> Column:
     return F.pmod(F.xxhash64(host), F.lit(n_shards)).cast("int")
 
 
+# Temp columns canonicalize_frontier builds and drops again.
+_CANON_TMP = ("__u", "__scheme", "__hp", "__path", "__q", "__qs", "__canon")
+
+
 def canonicalize_frontier(df, base_url: str | None = None, n_shards: int = 32):
     """Fill the derived columns of a frontier DataFrame in one pass:
     canonical url, url_key (canonical url when key was defaulted to the
@@ -117,7 +121,17 @@ def canonicalize_frontier(df, base_url: str | None = None, n_shards: int = 32):
     declines to inline non-cheap exprs used more than once).  Same
     regexes, same composition order => bit-identical output;
     :func:`canonicalize_url` stays the reference single-expression
-    form (the oracle-checked gate uses it directly)."""
+    form (the oracle-checked gate uses it directly).
+
+    Raises ``ValueError`` when ``df`` already has one of the temp
+    column names (``__u`` ... ``__canon``): the pass would overwrite
+    and then drop it."""
+    clash = [c for c in _CANON_TMP if c in df.columns]
+    if clash:
+        raise ValueError(
+            f"canonicalize_frontier: input already has column(s) "
+            f"{clash}, which it uses as temp columns"
+        )
     raw_url = F.col("url")
     d = df.withColumn("__u", F.trim(resolve_url(raw_url, base_url)))
     d = (
@@ -171,7 +185,7 @@ def canonicalize_frontier(df, base_url: str | None = None, n_shards: int = 32):
     return (
         d.withColumn("url_key", key)
         .withColumn("url", F.col("__canon"))
-        .drop("__u", "__scheme", "__hp", "__path", "__q", "__qs", "__canon")
+        .drop(*_CANON_TMP)
         .withColumn("host", url_host(F.col("url")))
         .withColumn("host_salt", host_salt(F.col("host"), n_shards))
         .withColumn("url_hash", url_hash(F.col("url_key")))

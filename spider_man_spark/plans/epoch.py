@@ -67,8 +67,8 @@ class EpochResult:
     # whether the committed robots table carries any disallow rules —
     # lets the next epoch skip the disallowed-branch bookkeeping
     has_disallow: bool = True
-    # commit layout the frontier write actually used ("full" | "mor" |
-    # "sharded") — cfg "auto" resolves per epoch before the write
+    # commit layout the frontier write actually used ("full" | "mor")
+    # — cfg "auto" resolves per epoch before the write
     frontier_mode_used: str = "full"
     # max(tokens_per_epoch) observed on this epoch's robots write —
     # rides the manifest so the next epoch's scheduler gets its
@@ -88,22 +88,6 @@ class EpochResult:
         return self.scheduled == 0 and self.frontier_size == 0
 
 
-def _resolve_frontier_write(cfg, prev_size: int | None) -> str:
-    """Resolve cfg.frontier_write "auto" per the config docstring:
-    anti-join below frontier_mor_min_rows, rank at/above it (measured:
-    wall-neutral at 640k, rank 0.85x at 4.2M — the persisted rank
-    turns a LARGE full-rewrite commit into a cache scan, and a large
-    frontier in a non-MOR mode means MOR was opted out or churn is
-    high, the regime where the persist pays for itself).  An unknown
-    size resolves to anti-join — the cheap-commit small-crawl guess;
-    the O(1) manifest chain makes the size known from epoch 2 on."""
-    if cfg.frontier_write != "auto":
-        return cfg.frontier_write
-    if prev_size is not None and prev_size >= cfg.frontier_mor_min_rows:
-        return "rank"
-    return "antijoin"
-
-
 def _resolve_frontier_mode(
     store, cfg, prev: int, frontier
 ) -> tuple[str, int | None]:
@@ -117,8 +101,8 @@ def _resolve_frontier_mode(
     frontier_mode = cfg.frontier_mode
     prev_size = None
     # the O(1) size chain is mode-independent (job.step records
-    # frontier_size in the manifest every epoch) — full/sharded
-    # commits use it to bound the anti-join broadcast decision
+    # frontier_size in the manifest every epoch) — full commits use
+    # it to bound the anti-join broadcast decision
     man = store.manifest()
     if int(man.get("epoch", -1)) == prev and "frontier_size" in man:
         prev_size = int(man["frontier_size"])
@@ -241,18 +225,15 @@ def run_epoch(
     frontier_mode, prev_size = _resolve_frontier_mode(
         store, cfg, prev, frontier
     )
-    # losers are materialized ONLY in the rank-write regime: MOR
-    # never writes unscheduled rows, and the anti-join commit derives
-    # them by subtraction — both run the WindowGroupLimit rank with
-    # no full-frontier persist.  dedup=False forces the rank commit:
-    # the anti-join removes EVERY copy of a scheduled url_key, so
-    # with duplicate keys in the frontier it would drop unscheduled
-    # copies the rank kept as losers (same unique-key assumption
-    # MOR's tombstones validate against at config time)
-    fwrite = _resolve_frontier_write(cfg, prev_size)
-    need_losers = frontier_mode != "mor" and (
-        fwrite == "rank" or not cfg.dedup
-    )
+    # losers are materialized ONLY for a dedup=False full commit: MOR
+    # never writes unscheduled rows, and with dedup on (unique
+    # url_keys) the full commit derives them by subtraction — both
+    # run the WindowGroupLimit rank with no full-frontier persist.
+    # Without dedup the anti-join would remove EVERY copy of a
+    # scheduled url_key, dropping unscheduled duplicate copies the
+    # rank keeps as losers (the same unique-key assumption MOR's
+    # tombstones validate against at config time)
+    need_losers = frontier_mode != "mor" and not cfg.dedup
     if "downloader" in suspended:
         scheduled = spark.createDataFrame([], FRONTIER_SCHEMA)
         deferred = frontier
@@ -264,7 +245,7 @@ def run_epoch(
             tokens_default=cfg.tokens_per_epoch,
             rank_salts=cfg.rank_salts,
             max_per_epoch=cfg.max_per_epoch,
-            # (need_losers mode only) the ranked frontier is persisted
+            # (need_losers only) the ranked frontier is persisted
             # and reused by BOTH the scheduled branch (materializes
             # during fetch) and the rank-losers branch of the frontier
             # write — without it the write reruns the full-frontier
@@ -549,33 +530,31 @@ def run_epoch(
         requeue.append(
             admitted.select(*[f.name for f in FRONTIER_SCHEMA.fields])
         )
-    # leavers = the PRE-pipeline scheduled rows, shared by all three
-    # commit derivations below (anti-join keep set, MOR tombstones,
-    # sharded dirty set): pipelines drop skipped rows (no retry,
-    # producer/ets.ex:150) and split out errored rows AFTER
-    # scheduling, but every originally-scheduled row left the
-    # frontier — `piped` (the persisted pre-split pipeline output)
+    # leavers = the PRE-pipeline scheduled rows, shared by both
+    # commit derivations below (anti-join keep set, MOR tombstones):
+    # pipelines drop skipped rows (no retry, producer/ets.ex:150) and
+    # split out errored rows AFTER scheduling, but every
+    # originally-scheduled row left the frontier — `piped` (the
+    # persisted pre-split pipeline output)
     # carries exactly that set; using the post-pipeline `scheduled`
     # would resurrect skipped rows forever and double-insert errored
     # retries
     leavers = piped if piped is not None else scheduled
     frontier_next = None
     if deferred is not None:
-        # legacy rank-losers side outputs (cfg.frontier_write="rank"
-        # or dedup=False), or the suspended-downloader epoch
-        # (deferred = whole frontier)
+        # rank-losers side outputs (dedup=False), or the
+        # suspended-downloader epoch (deferred = whole frontier)
         frontier_next = deferred.select(
             *[f.name for f in FRONTIER_SCHEMA.fields]
         )
         for p in requeue:
             frontier_next = frontier_next.unionByName(p)
     elif frontier_mode != "mor":
-        # anti-join commit (default): keep = frontier minus the
+        # anti-join commit (dedup on): keep = frontier minus the
         # disallow predicate minus an anti-join on the scheduled
         # url_keys.  The leave side is budget-bounded and reads from
         # the persisted piped/scheduled cache, so the whole branch is
-        # map-side — the full-frontier rank/persist the losers
-        # contract forced is gone in every commit mode.  Broadcast
+        # map-side — no full-frontier rank persist.  Broadcast
         # only under a KNOWN O(1) bound (manifest size chain /
         # global cap — mirrors the MOR read path's key guard);
         # otherwise AQE's runtime stats pick the strategy.
@@ -638,45 +617,6 @@ def run_epoch(
             res.frontier_churn = int(meta_now["n_enter"]) + int(
                 meta_now["n_leave"]
             )
-    elif frontier_mode == "sharded":
-        # shard-selective commit: only shards touched by leavers
-        # (scheduled/disallowed) or enterers (retries/admitted) are
-        # rewritten; untouched shards' files stay in place.  Wins only
-        # when scheduling activity is shard-sparse — with the budget
-        # spread over every host, every shard is dirty and this
-        # degenerates to a slower full rewrite (bench-measured); kept
-        # for the long-tail politeness-throttled shape.  The dirty
-        # set is bounded by n_host_shards, so the collect is tiny; the
-        # job that computes it is the epoch's first materialization
-        # (rank + fetch + parse + dedup execute here and land in the
-        # caches the write below reuses).
-        shard = F.coalesce(F.col("host_salt"), F.lit(-1))
-        # a shard whose only activity was a pipeline-skipped row
-        # still churned and must be rewritten without that row —
-        # hence `leavers`, not the post-pipeline `scheduled`
-        dirty_src = [leavers.select(shard.alias("s"))]
-        if disallowed is not None:
-            dirty_src.append(disallowed.select(shard.alias("s")))
-        for p in requeue:
-            dirty_src.append(p.select(shard.alias("s")))
-        dirty_df = dirty_src[0]
-        for p in dirty_src[1:]:
-            dirty_df = dirty_df.unionByName(p)
-        dirty = sorted(
-            int(r["s"]) for r in dirty_df.distinct().collect()
-        )
-        prev_counts = store.snapshot_shard_counts("frontier", prev)
-        if dirty:
-            frontier_dirty = frontier_next.withColumn(
-                "__fshard", shard
-            ).filter(F.col("__fshard").isin(dirty))
-            res.frontier_size = store.write_sharded_snapshot(
-                "frontier", frontier_dirty, epoch, dirty, prev_counts
-            )
-        else:
-            # nothing left or entered: the previous snapshot IS this
-            # epoch's snapshot — write nothing at all
-            res.frontier_size = sum(prev_counts.values())
     else:
         # observe the size during the write — no read-back job
         obs = Observation()
@@ -996,7 +936,7 @@ def run_epoch(
         else 0
     )
     if res.frontier_churn is None:
-        # full/sharded commit: leaves ≈ scheduled (disallowed ride in
+        # full commit: leaves ≈ scheduled (disallowed ride in
         # res.dead), enters ≈ admitted + retries — a free estimate off
         # counts already observed, accurate enough for the auto
         # policy's churn-fraction gate

@@ -270,7 +270,8 @@ class CrawlJob:
         # read-write replacement (localCheckpoint + tmp-dir swap) is
         # pure overhead — write directly (the common cold-start seed
         # pays one materialization instead of two)
-        if self.store._epochs("frontier", epoch):
+        fresh = not self.store._epochs("frontier", epoch)
+        if not fresh:
             frontier = self.store.read_snapshot(
                 "frontier", epoch, FRONTIER_SCHEMA
             )
@@ -308,13 +309,17 @@ class CrawlJob:
                 epoch,
             )
         # ONE atomic commit: epoch bootstrap, the O(1) size-chain
-        # update (admitted keys are seen-deduped, so +n is exact), and
-        # the pending-op clear land together or not at all
+        # update (admitted keys are seen-deduped, so +n is exact; a
+        # fresh frontier IS the n admitted rows, which seeds the chain
+        # so epoch 1 needs no count), and the pending-op clear land
+        # together or not at all
         final_kv: dict[str, Any] = {"pending_op": None}
         if self.store.last_epoch() < 0:
             final_kv.update(epoch=0, job_name=self.cfg.job_name)
         m_size = self.store.manifest().get("frontier_size")
-        if m_size is not None:
+        if fresh:
+            final_kv["frontier_size"] = n
+        elif m_size is not None:
             final_kv["frontier_size"] = int(m_size) + n
         self.store.commit(**final_kv)
         admitted.unpersist()
@@ -332,26 +337,28 @@ class CrawlJob:
         return "suspended" if self.suspended == set(COMPONENTS) else "running"
 
     # -- epoch loop --
-    _last_frontier_size: int | None = None
-
     def _tune_partitions(self) -> None:
         """Size shuffle partitions to the frontier: window exchanges
         can't be AQE-coalesced (coalescing would break their hash
         requirement), so small epochs would otherwise pay full-width
-        task overhead on every rank/dedup stage."""
+        task overhead on every rank/dedup stage.  The size is the
+        manifest's O(1) chain — recorded by the seed insert and by
+        every epoch commit, so epoch 1 is sized too; only a dropped
+        chain (crash reconcile) leaves the session width in place."""
         if self.cfg.shuffle_partitions:
             self.spark.conf.set(
                 "spark.sql.shuffle.partitions",
                 str(self.cfg.shuffle_partitions),
             )
             return
-        if self._last_frontier_size is None:
+        size = self.store.manifest().get("frontier_size")
+        if size is None:
             return
         # ~50k frontier rows per partition: A/B-measured optimum on
         # this workload — widening to core count made BOTH cluster
         # sizes slower (per-task fixed cost dominates over parallelism
         # for these string-heavy, sub-GB shuffles)
-        target = max(8, min(256, self._last_frontier_size // 50_000))
+        target = max(8, min(256, int(size) // 50_000))
         self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
 
     def step(self) -> EpochResult:
@@ -409,8 +416,8 @@ class CrawlJob:
         if self.cfg.compact_every and epoch and epoch % self.cfg.compact_every == 0:
             self.store.compact("seen", epoch)
             if self.cfg.frontier_mode != "full":
-                # bound the MOR tombstone chain / sharded epoch-dir
-                # walk the same way the seen-delta union is bounded
+                # bound the MOR tombstone chain the same way the
+                # seen-delta union is bounded
                 self.store.compact_snapshot("frontier", epoch)
         elif self.cfg.frontier_mode != "full" and (
             self.cfg.frontier_compact_max_chain
@@ -430,7 +437,6 @@ class CrawlJob:
                 and nbytes >= self.cfg.frontier_compact_delta_bytes
             ):
                 self.store.compact_snapshot("frontier", epoch)
-        self._last_frontier_size = res.frontier_size
         return res
 
     def switch_fetch_options(self, **opts: Any) -> None:

@@ -34,17 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# Marker file inside an epoch dir that makes a snapshot SHARD-SELECTIVE:
-# the dir holds only the host-shards whose membership changed that epoch
-# (as __fshard=K subdirs) plus this metadata file recording which shards
-# are covered ("dirty") and the cumulative per-shard row counts.  Shards
-# not listed resolve at an older epoch dir — so a frontier epoch writes
-# O(churn) bytes instead of rewriting the full snapshot (the 10^10-URL
-# posture: the unscheduled majority's files stay in place).  Equivalent
-# to an Iceberg MERGE that replaces only the data files of touched
-# partitions.
-SHARD_META = "shards.json"
-_FSHARD = "__fshard"
+# Marker file an older build's shard-selective ("sharded") frontier
+# commit left in its epoch dirs.  That layout is no longer read:
+# StateStore refuses a workdir that still holds one (see
+# _refuse_legacy_layout).
+_LEGACY_SHARD_META = "shards.json"
 
 # Marker file for a MERGE-ON-READ delta epoch dir (Iceberg MOR
 # posture): the dir holds only `enter/` (rows that joined the frontier
@@ -52,9 +46,7 @@ _FSHARD = "__fshard"
 # for rows that left — scheduled/disallowed), plus this metadata file
 # with the delta counts and the resulting snapshot size.  The
 # effective snapshot is assembled at read time; per-epoch write I/O is
-# O(churn) UNCONDITIONALLY — unlike shard-selective rewrite, which
-# degenerates to a full rewrite whenever scheduling touches every
-# host-shard (the common case for an evenly-budgeted crawl).
+# O(churn) regardless of how scheduling spreads over hosts.
 MOR_META = "delta.json"
 # Broadcast the tombstone set into the read-side join while it stays
 # comfortably under executor memory; beyond that let it shuffle.
@@ -79,6 +71,28 @@ class StateStore:
         self.workdir = workdir
         os.makedirs(workdir, exist_ok=True)
         self._recover_replacements()
+        self._refuse_legacy_layout()
+
+    def _refuse_legacy_layout(self) -> None:
+        """Reject a frontier written in an older build's shard-selective
+        layout: its epoch dirs hold only the shards that changed, so
+        reading one as a full snapshot would silently drop every other
+        shard's rows."""
+        d = os.path.join(self.workdir, "frontier")
+        if not os.path.isdir(d):
+            return
+        for name in sorted(os.listdir(d)):
+            if name.startswith("e_") and name[2:].isdigit() and os.path.exists(
+                os.path.join(d, name, _LEGACY_SHARD_META)
+            ):
+                raise ValueError(
+                    f"{self.workdir}: frontier/{name} was written in the "
+                    f"removed 'sharded' frontier layout "
+                    f"({_LEGACY_SHARD_META}), which this build cannot "
+                    f"read.  Fold it into one full snapshot first with "
+                    f"an older build: StateStore(spark, workdir)"
+                    f".compact_snapshot('frontier', <last epoch>)"
+                )
 
     # -- crash-safe in-place dir replacement (compaction) --
     def _recover_replacements(self) -> None:
@@ -92,10 +106,9 @@ class StateStore:
             for name in os.listdir(d):
                 p = os.path.join(d, name)
                 if name.endswith("__shtmp"):
-                    # interrupted sharded-snapshot build (see
-                    # write_sharded_snapshot): never roll forward —
-                    # without its final shards.json the dir would read
-                    # as a full snapshot of only the dirty shards
+                    # an older build's interrupted shard-selective
+                    # write: never roll forward — it holds only the
+                    # dirty shards and would read as a full snapshot
                     shutil.rmtree(p, ignore_errors=True)
                 elif name.endswith("__tmp"):
                     final = p[: -len("__tmp")]
@@ -244,63 +257,6 @@ class StateStore:
         )
         open(os.path.join(path, "_SUCCESS"), "w").close()
 
-    def write_sharded_snapshot(
-        self,
-        kind: str,
-        df: DataFrame,
-        epoch: int,
-        dirty: list[int],
-        prev_counts: dict[int, int],
-    ) -> int:
-        """Shard-selective snapshot commit: write ONLY the dirty shards
-        (``df`` must carry an ``__fshard`` int column and already be
-        filtered to ``dirty``), record covered shards + cumulative
-        per-shard row counts in shards.json.  Untouched shards' files
-        in older epoch dirs stay in place — per-epoch write I/O is
-        O(churn), not O(|snapshot|).  Returns the total snapshot size
-        (sum of the updated counts), so callers get the full-frontier
-        cardinality without any extra job over the clean shards."""
-        # Commit protocol: build the WHOLE dir (parquet + shards.json)
-        # under a tmp name, then atomically rename.  Writing shards.json
-        # after Spark's _SUCCESS into the live path would open a crash
-        # window where _epochs sees a committed dir but readers find no
-        # meta and treat the dirty shards as a FULL snapshot.  The tmp
-        # suffix is distinct from _safe_replace_dir's `__tmp` on
-        # purpose: that one is rolled FORWARD on recovery when _SUCCESS
-        # exists, which would resurrect exactly the meta-less window;
-        # `__shtmp` leftovers are only ever deleted.
-        path = os.path.join(self.workdir, kind, _edir(epoch))
-        tmp = path + "__shtmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").partitionBy(_FSHARD).parquet(tmp)
-        written: dict[int, int] = {}
-        if any(
-            name.startswith(f"{_FSHARD}=") for name in os.listdir(tmp)
-        ):
-            # per-shard written counts: a count over freshly-written
-            # parquet is served from footer metadata (O(files), not
-            # O(rows)) and is bounded by |dirty| result rows
-            rows = (
-                self.spark.read.parquet(tmp)
-                .groupBy(_FSHARD)
-                .count()
-                .collect()
-            )
-            written = {int(r[_FSHARD]): int(r["count"]) for r in rows}
-        counts = {int(k): int(v) for k, v in prev_counts.items()}
-        for k in dirty:
-            counts[int(k)] = written.get(int(k), 0)
-        counts = {k: v for k, v in counts.items() if v > 0}
-        meta = {
-            "dirty": sorted(int(k) for k in dirty),
-            "counts": {str(k): v for k, v in sorted(counts.items())},
-        }
-        with open(os.path.join(tmp, SHARD_META), "w") as f:
-            json.dump(meta, f)
-        shutil.rmtree(path, ignore_errors=True)
-        os.rename(tmp, path)
-        return sum(counts.values())
-
     def write_mor_delta(
         self,
         kind: str,
@@ -367,23 +323,16 @@ class StateStore:
 
     def snapshot_size_fast(self, kind: str, up_to: int) -> int | None:
         """O(1) snapshot cardinality when the newest epoch dir carries
-        it (MOR meta or sharded counts); None when only a full dir is
-        newest (caller counts once and the next delta commit re-seeds
-        the fast path)."""
+        it (MOR meta); None when a full dir is newest (caller counts
+        once and the next delta commit re-seeds the fast path)."""
         eps = self._epochs(kind, up_to)
         if not eps:
             return 0
         meta = self._mor_meta(kind, eps[-1])
-        if meta is not None:
-            return int(meta["size"])
-        smeta = self._shard_meta(kind, eps[-1])
-        if smeta is not None:
-            return sum(int(v) for v in smeta["counts"].values())
-        return None
+        return None if meta is None else int(meta["size"])
 
     def _read_mor(
-        self, kind: str, eps: list[int], schema: StructType | None,
-        shard_col: str,
+        self, kind: str, eps: list[int], schema: StructType | None
     ) -> DataFrame | None:
         """Assemble base ∪ enters minus tombstones.  A row entered at
         epoch e survives iff no leave for its key has epoch > e (a
@@ -402,16 +351,10 @@ class StateStore:
         parts: list[DataFrame] = []
         key_col = "url_key"
         if base_eps:
-            if self._shard_meta(kind, base_eps[-1]) is not None:
-                base = self._read_sharded(
-                    kind, base_eps, schema, shard_col
-                )
-            else:
-                base = self.spark.read.parquet(
-                    os.path.join(self.workdir, kind, _edir(base_eps[-1]))
-                )
-            if base is not None:
-                parts.append(base.withColumn("__ee", F.lit(-1)))
+            base = self.spark.read.parquet(
+                os.path.join(self.workdir, kind, _edir(base_eps[-1]))
+            )
+            parts.append(base.withColumn("__ee", F.lit(-1)))
         # one multi-dir scan per side with the epoch recovered from the
         # file path — plan size stays O(1) in the delta-chain length
         # instead of an N-way union (the chain is re-read every epoch,
@@ -465,7 +408,7 @@ class StateStore:
 
     def mor_chain_stats(self, kind: str, up_to: int) -> tuple[int, int]:
         """(chain_len, delta_bytes) of the MOR delta chain above the
-        newest full/sharded base — a driver-side metadata walk over
+        newest full base — a driver-side metadata walk over
         O(chain) dirs, no Spark job.  Drives the churn-volume
         compaction triggers (frontier_compact_max_chain /
         frontier_compact_delta_bytes)."""
@@ -485,106 +428,8 @@ class StateStore:
                         pass
         return chain, nbytes
 
-    def _shard_meta(self, kind: str, epoch: int) -> dict | None:
-        p = os.path.join(self.workdir, kind, _edir(epoch), SHARD_META)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def snapshot_shard_counts(
-        self, kind: str, up_to: int, shard_col: str = "host_salt"
-    ) -> dict[int, int]:
-        """Cumulative per-shard row counts of the effective snapshot at
-        ``up_to``.  O(1) when the newest dir is shard-selective (the
-        counts ride in its shards.json); otherwise bootstrapped by one
-        groupBy over the full snapshot (pays off only after a seed
-        insert / restore / compaction rewrote a full dir)."""
-        eps = self._epochs(kind, up_to)
-        if not eps:
-            return {}
-        meta = self._shard_meta(kind, eps[-1])
-        if meta is not None:
-            return {int(k): int(v) for k, v in meta["counts"].items()}
-        snap = self.read_snapshot(kind, up_to)
-        if snap is None:
-            return {}
-        rows = (
-            snap.groupBy(
-                F.coalesce(F.col(shard_col), F.lit(-1)).alias("s")
-            )
-            .count()
-            .collect()
-        )
-        return {int(r["s"]): int(r["count"]) for r in rows if r["count"]}
-
-    def _read_sharded(
-        self, kind: str, eps: list[int], schema: StructType | None,
-        shard_col: str,
-    ) -> DataFrame:
-        """Assemble the effective snapshot from shard-selective epoch
-        dirs: walking newest-first, each shard resolves at the newest
-        dir that covers it; a full (meta-less) dir is the base for
-        everything still uncovered."""
-        covered: set[int] = set()
-        shard_parts: list[tuple[str, list[str]]] = []
-        base_eps: list[int] = []
-        base_cov: set[int] = set()
-        for i in range(len(eps) - 1, -1, -1):
-            e = eps[i]
-            d = os.path.join(self.workdir, kind, _edir(e))
-            meta = self._shard_meta(kind, e)
-            if meta is None:
-                base_eps = eps[: i + 1]
-                base_cov = set(covered)
-                break
-            take = [
-                int(k) for k in meta["dirty"] if int(k) not in covered
-            ]
-            subs = [
-                os.path.join(d, f"{_FSHARD}={k}")
-                for k in take
-                if os.path.isdir(os.path.join(d, f"{_FSHARD}={k}"))
-            ]
-            if subs:
-                shard_parts.append((d, subs))
-            covered.update(int(k) for k in meta["dirty"])
-        dfs: list[DataFrame] = []
-        for basepath, subs in shard_parts:
-            dfs.append(
-                self.spark.read.option("basePath", basepath)
-                .parquet(*subs)
-                .drop(_FSHARD)
-            )
-        if base_eps:
-            # the base below a sharded chain may itself be a MOR delta
-            # chain — delegate so tombstones apply (reading the raw
-            # enter/leave dirs as a snapshot would be garbage)
-            if self._mor_meta(kind, base_eps[-1]) is not None:
-                bdf = self._read_mor(kind, base_eps, schema, shard_col)
-            else:
-                bdf = self.spark.read.parquet(
-                    os.path.join(self.workdir, kind, _edir(base_eps[-1]))
-                )
-            if bdf is not None:
-                if base_cov:
-                    bdf = bdf.filter(
-                        ~F.coalesce(F.col(shard_col), F.lit(-1)).isin(
-                            sorted(base_cov)
-                        )
-                    )
-                dfs.append(bdf)
-        if not dfs:
-            if schema is not None:
-                return self.spark.createDataFrame([], schema)
-            return None
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
-        return out
-
     def compact_snapshot(self, kind: str, epoch: int) -> int:
-        """Collapse sharded/MOR history into one full dir at ``epoch``
+        """Collapse MOR history into one full dir at ``epoch``
         and drop the older dirs — bounds the epoch-dir walk the same
         way delta compaction bounds the delta union.  Crash-safe: the
         committed newest dir is replaced via _safe_replace_dir, and
@@ -593,16 +438,12 @@ class StateStore:
         eps = self._epochs(kind, epoch)
         if not eps:
             return 0
-        newest_plain = (
-            self._shard_meta(kind, eps[-1]) is None
-            and self._mor_meta(kind, eps[-1]) is None
-        )
+        newest_plain = self._mor_meta(kind, eps[-1]) is None
         if not newest_plain:
             merged = self.read_snapshot(kind, epoch)
             if merged is None:
-                # all-empty chain (zero-churn MOR deltas / no dirty
-                # shards over no base — a drained or never-seeded
-                # frontier): nothing to rewrite; fold by keeping the
+                # all-empty chain (zero-churn MOR deltas over no base
+                # — a drained or never-seeded frontier): nothing to rewrite; fold by keeping the
                 # newest (empty) head and pruning the rest
                 newest_plain = True
             else:
@@ -644,8 +485,7 @@ class StateStore:
         return sorted(out)
 
     def read_snapshot(
-        self, kind: str, up_to: int, schema: StructType | None = None,
-        shard_col: str = "host_salt",
+        self, kind: str, up_to: int, schema: StructType | None = None
     ) -> DataFrame | None:
         eps = self._epochs(kind, up_to)
         if not eps:
@@ -653,9 +493,7 @@ class StateStore:
                 return self.spark.createDataFrame([], schema)
             return None
         if self._mor_meta(kind, eps[-1]) is not None:
-            return self._read_mor(kind, eps, schema, shard_col)
-        if self._shard_meta(kind, eps[-1]) is not None:
-            return self._read_sharded(kind, eps, schema, shard_col)
+            return self._read_mor(kind, eps, schema)
         return self.spark.read.parquet(
             os.path.join(self.workdir, kind, _edir(eps[-1]))
         )

@@ -68,8 +68,8 @@ def stub_fetch(scheduled: DataFrame, corpus: DataFrame) -> DataFrame:
     shuffle (profiled: 7.6 GB written + read per epoch at the bench's
     disk-corpus scale shape — the single biggest stage of the crawl).
     The scheduled side is budget-bounded (per-host tokens x hosts), so
-    when its measured size fits a broadcast we split the left-outer
-    into
+    when it is PERSISTED and its measured size fits a broadcast we
+    split the left-outer into
 
     * ``corpus INNER JOIN broadcast(scheduled)`` — the corpus STREAMS
       (zero corpus-side exchange, zero scheduled-side exchange), and
@@ -86,6 +86,13 @@ def stub_fetch(scheduled: DataFrame, corpus: DataFrame) -> DataFrame:
     HashedRelation under ~1 GB — inside the engine's 8-32 g driver
     envelope) falls back to the shuffled-hash plan below, which is
     the scale-honest strategy when BOTH sides are big.
+
+    Precondition for the split: ``scheduled`` must be persisted (as
+    ``run_epoch`` does).  The split reads it in three plans (count,
+    inner join, anti join); an unpersisted, nondeterministic input
+    could differ between them and the count would re-run its whole
+    lineage eagerly.  So an unpersisted input takes the shuffled-hash
+    plan, lazily — building the plan then starts no Spark job.
     """
     c = corpus.select(
         F.col("url").alias("__curl"),
@@ -96,7 +103,7 @@ def stub_fetch(scheduled: DataFrame, corpus: DataFrame) -> DataFrame:
     )
     bc_max = int(os.environ.get("SPARK_GRAFT_FETCH_BC_ROWS", "1500000"))
     n_sched = None
-    if bc_max > 0:
+    if bc_max > 0 and scheduled.is_cached:
         # materializes the scheduled persist (work the fetch join would
         # do anyway — the join then reads the cache); the count gates
         # the join strategy on the actual epoch budget

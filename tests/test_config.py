@@ -40,6 +40,11 @@ def test_validation_errors():
         CrawlConfig(callbacks={"init": "not callable"})
     with pytest.raises(SettingsError):
         from_settings({"bogus_key": 1})
+    # the shard-selective layout and the frontier_write knob are gone
+    with pytest.raises(SettingsError):
+        CrawlConfig(frontier_mode="sharded")
+    with pytest.raises(SettingsError):
+        from_settings(frontier_write="rank")
 
 
 def test_from_settings_direct_args_win():

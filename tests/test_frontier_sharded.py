@@ -1,14 +1,15 @@
-"""Frontier commit strategies (state.write_mor_delta /
-write_sharded_snapshot): per-epoch write I/O is O(churn) while the
-effective snapshot stays row-equivalent to the full-rewrite layout.
+"""Frontier commit strategies (full rewrite / state.write_mor_delta):
+MOR per-epoch write I/O is O(churn) while the effective snapshot stays
+row-equivalent to the full-rewrite layout.
 
 The reference keeps its whole frontier in a driver-local ETS queue
 (producer/ets.ex), so snapshot cost never appears there; at 10^10 URLs
-a full rewrite per epoch is the scale killer the MOR layout removes
-(VERDICT r3 'one remaining scale design concern').  MOR (default)
-writes enter-rows + leave-tombstones and assembles at read time;
-sharded rewrites only dirty host-shards (wins only when activity is
-shard-sparse)."""
+a full rewrite per epoch is the scale killer the MOR layout removes.
+MOR writes enter-rows + leave-tombstones and assembles at read time;
+"auto" (default) picks MOR for large, low-churn frontiers.  A full
+commit keeps the anti-join of the scheduled keys when dedup
+guarantees unique url_keys, and the rank-losers side outputs
+otherwise."""
 
 from __future__ import annotations
 
@@ -20,7 +21,7 @@ from pyspark.sql import functions as F
 
 from spider_man_spark.config import CrawlConfig
 from spider_man_spark.plans.job import CrawlJob
-from spider_man_spark.plans.state import SHARD_META, StateStore
+from spider_man_spark.plans.state import StateStore
 from spider_man_spark.schemas import FRONTIER_SCHEMA
 from spider_man_spark.sources.corpus import make_corpus
 
@@ -39,115 +40,6 @@ def _frontier_df(spark, rows):
 def _snap_rows(store, epoch):
     df = store.read_snapshot("frontier", epoch, FRONTIER_SCHEMA)
     return sorted((r.url_key, r.host_salt) for r in df.collect())
-
-
-def test_sharded_write_overlays_full_base(spark, tmp_path):
-    store = StateStore(spark, str(tmp_path / "wd"))
-    # epoch 0: full snapshot, shards 0/1/2
-    base = [("a0", 0), ("a1", 0), ("b0", 1), ("c0", 2)]
-    store.write("frontier", _frontier_df(spark, base), 0)
-    # epoch 1: shard 1 churns (b0 leaves, b1+b2 enter); 0/2 untouched
-    delta = _frontier_df(spark, [("b1", 1), ("b2", 1)]).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    total = store.write_sharded_snapshot(
-        "frontier", delta, 1, [1],
-        store.snapshot_shard_counts("frontier", 0),
-    )
-    assert total == 5  # shard0: 2, shard1: 2 (rewritten), shard2: 1
-    assert _snap_rows(store, 1) == sorted(
-        [("a0", 0), ("a1", 0), ("b1", 1), ("b2", 1), ("c0", 2)]
-    )
-
-
-def test_emptied_shard_stays_empty(spark, tmp_path):
-    """A dirty shard that ends the epoch with zero rows must NOT fall
-    back to its older files (that would resurrect scheduled rows)."""
-    store = StateStore(spark, str(tmp_path / "wd"))
-    store.write(
-        "frontier", _frontier_df(spark, [("a0", 0), ("b0", 1)]), 0
-    )
-    empty = _frontier_df(spark, []).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    total = store.write_sharded_snapshot(
-        "frontier", empty, 1, [1],
-        store.snapshot_shard_counts("frontier", 0),
-    )
-    assert total == 1
-    assert _snap_rows(store, 1) == [("a0", 0)]
-    # and the shard stays empty through a later sharded epoch too
-    delta2 = _frontier_df(spark, [("c0", 2)]).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    store.write_sharded_snapshot(
-        "frontier", delta2, 2, [2],
-        store.snapshot_shard_counts("frontier", 1),
-    )
-    assert _snap_rows(store, 2) == [("a0", 0), ("c0", 2)]
-
-
-def test_newest_shard_wins_across_epochs(spark, tmp_path):
-    """The same shard rewritten at two sharded epochs resolves at the
-    newest one only."""
-    store = StateStore(spark, str(tmp_path / "wd"))
-    store.write("frontier", _frontier_df(spark, [("a0", 0)]), 0)
-    for epoch, rows in ((1, [("b1", 1)]), (2, [("b2", 1), ("b3", 1)])):
-        delta = _frontier_df(spark, rows).withColumn(
-            "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-        )
-        store.write_sharded_snapshot(
-            "frontier", delta, epoch, [1],
-            store.snapshot_shard_counts("frontier", epoch - 1),
-        )
-    assert _snap_rows(store, 2) == [("a0", 0), ("b2", 1), ("b3", 1)]
-    # time travel still works: epoch 1 sees b1
-    assert _snap_rows(store, 1) == [("a0", 0), ("b1", 1)]
-
-
-def test_counts_ride_in_meta_and_bootstrap(spark, tmp_path):
-    store = StateStore(spark, str(tmp_path / "wd"))
-    store.write(
-        "frontier",
-        _frontier_df(spark, [("a0", 0), ("a1", 0), ("b0", 1)]),
-        0,
-    )
-    # bootstrap path: newest dir is full -> one groupBy
-    assert store.snapshot_shard_counts("frontier", 0) == {0: 2, 1: 1}
-    delta = _frontier_df(spark, [("b1", 1), ("b2", 1)]).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    store.write_sharded_snapshot(
-        "frontier", delta, 1, [1],
-        store.snapshot_shard_counts("frontier", 0),
-    )
-    # O(1) path: counts come from shards.json, no job
-    assert store.snapshot_shard_counts("frontier", 1) == {0: 2, 1: 2}
-    meta = json.load(
-        open(os.path.join(store.workdir, "frontier", "e_00001", SHARD_META))
-    )
-    assert meta["dirty"] == [1]
-
-
-def test_compact_snapshot_collapses_history(spark, tmp_path):
-    store = StateStore(spark, str(tmp_path / "wd"))
-    store.write("frontier", _frontier_df(spark, [("a0", 0), ("b0", 1)]), 0)
-    delta = _frontier_df(spark, [("b1", 1)]).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    store.write_sharded_snapshot(
-        "frontier", delta, 1, [1],
-        store.snapshot_shard_counts("frontier", 0),
-    )
-    expected = _snap_rows(store, 1)
-    assert store.compact_snapshot("frontier", 1) == 1
-    # single full dir now; same rows; counts re-bootstrap
-    assert store._shard_meta("frontier", 1) is None
-    assert _snap_rows(store, 1) == expected
-    assert not os.path.isdir(
-        os.path.join(store.workdir, "frontier", "e_00000")
-    )
-    assert store.snapshot_shard_counts("frontier", 1) == {0: 1, 1: 1}
 
 
 def test_mor_delta_basic_overlay(spark, tmp_path):
@@ -230,32 +122,59 @@ def test_mor_compact_collapses_chain(spark, tmp_path):
 
 
 def test_mixed_layout_chain(spark, tmp_path):
-    """full -> sharded -> MOR interleavings resolve correctly: each
-    layer overlays the one below it."""
+    """full -> MOR -> full -> MOR interleavings (what "auto" produces
+    when the policy flips) resolve correctly at every epoch, and
+    compaction folds the whole stack into one full dir."""
     store = StateStore(spark, str(tmp_path / "wd"))
     store.write(
         "frontier",
         _frontier_df(spark, [("a0", 0), ("b0", 1), ("c0", 2)]),
         0,
     )
-    # sharded epoch 1: shard 1 churns to b1
-    delta = _frontier_df(spark, [("b1", 1)]).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    store.write_sharded_snapshot(
-        "frontier", delta, 1, [1],
-        store.snapshot_shard_counts("frontier", 0),
-    )
-    # MOR epoch 2 on top of the sharded base: a0 leaves, d0 enters
+    # MOR epoch 1 over the full base: a0 leaves, d0 enters
     size = store.write_mor_delta(
         "frontier", _frontier_df(spark, [("d0", 3)]),
-        _frontier_df(spark, [("a0", 0)]), 2, prev_size=3,
+        _frontier_df(spark, [("a0", 0)]), 1, prev_size=3,
     )
     assert size == 3
-    assert _snap_rows(store, 2) == [("b1", 1), ("c0", 2), ("d0", 3)]
-    # compaction collapses all three layers into one full dir
-    store.compact_snapshot("frontier", 2)
-    assert _snap_rows(store, 2) == [("b1", 1), ("c0", 2), ("d0", 3)]
+    assert _snap_rows(store, 1) == [("b0", 1), ("c0", 2), ("d0", 3)]
+    # full epoch 2 (b0 scheduled), then MOR epoch 3 over it
+    store.write(
+        "frontier", _frontier_df(spark, [("c0", 2), ("d0", 3)]), 2
+    )
+    size = store.write_mor_delta(
+        "frontier", _frontier_df(spark, [("e0", 4)]),
+        _frontier_df(spark, [("c0", 2)]), 3, prev_size=2,
+    )
+    assert size == 2
+    assert _snap_rows(store, 3) == [("d0", 3), ("e0", 4)]
+    # time travel: each epoch resolves against its own base
+    assert _snap_rows(store, 1) == [("b0", 1), ("c0", 2), ("d0", 3)]
+    assert _snap_rows(store, 2) == [("c0", 2), ("d0", 3)]
+    # compaction collapses all four layers into one full dir
+    assert store.compact_snapshot("frontier", 3) == 3
+    assert store._epochs("frontier", 3) == [3]
+    assert store._mor_meta("frontier", 3) is None
+    assert _snap_rows(store, 3) == [("d0", 3), ("e0", 4)]
+
+
+def test_legacy_sharded_workdir_refused(spark, tmp_path):
+    """A frontier epoch dir carrying an older build's shards.json
+    holds only the shards that changed; reading it as a full snapshot
+    would drop rows, so opening the workdir fails and says how to
+    fold it."""
+    wd = str(tmp_path / "wd")
+    store = StateStore(spark, wd)
+    store.write("frontier", _frontier_df(spark, [("a0", 0)]), 0)
+    d1 = os.path.join(wd, "frontier", "e_00001")
+    os.makedirs(d1)
+    open(os.path.join(d1, "_SUCCESS"), "w").close()
+    with open(os.path.join(d1, "shards.json"), "w") as f:
+        json.dump({"dirty": [0], "counts": {"0": 1}}, f)
+    with pytest.raises(ValueError, match="e_00001.*compact_snapshot"):
+        StateStore(spark, wd)
+    with pytest.raises(ValueError, match="sharded"):
+        CrawlJob(spark, CrawlConfig(workdir=wd))
 
 
 def test_safe_replace_crash_recovery(spark, tmp_path):
@@ -307,8 +226,8 @@ def corpus(spark):
 
 def test_crawl_equivalence_all_modes(spark, tmp_path, corpus):
     """Whole-crawl equivalence: identical per-epoch scheduled counts,
-    frontier sizes, final frontier rows, and seen digest under all
-    three commit layouts — with compaction exercised mid-run."""
+    frontier sizes, final frontier rows, and seen digest under both
+    commit layouts — with compaction exercised mid-run."""
 
     def run(mode):
         cfg = CrawlConfig(
@@ -336,7 +255,6 @@ def test_crawl_equivalence_all_modes(spark, tmp_path, corpus):
 
     full = run("full")
     assert run("mor") == full
-    assert run("sharded") == full
 
 
 def test_auto_mode_policy(spark, tmp_path, corpus):
@@ -371,30 +289,6 @@ def test_auto_mode_policy(spark, tmp_path, corpus):
                                    FRONTIER_SCHEMA).count() > 0
 
 
-def test_sharded_over_mor_base(spark, tmp_path):
-    """A sharded dir committed on top of a MOR chain must read the
-    chain THROUGH its tombstones, not the raw enter/leave dirs."""
-    store = StateStore(spark, str(tmp_path / "wd"))
-    store.write(
-        "frontier", _frontier_df(spark, [("a0", 0), ("b0", 1)]), 0
-    )
-    # MOR epoch 1: a0 leaves, c0 (shard 2) enters
-    store.write_mor_delta(
-        "frontier", _frontier_df(spark, [("c0", 2)]),
-        _frontier_df(spark, [("a0", 0)]), 1, prev_size=2,
-    )
-    # sharded epoch 2 on top: shard 1 churns to b1
-    delta = _frontier_df(spark, [("b1", 1)]).withColumn(
-        "__fshard", F.coalesce(F.col("host_salt"), F.lit(-1))
-    )
-    store.write_sharded_snapshot(
-        "frontier", delta, 2, [1],
-        store.snapshot_shard_counts("frontier", 1),
-    )
-    # a0 must stay tombstoned; c0 from the MOR enter must survive
-    assert _snap_rows(store, 2) == [("b1", 1), ("c0", 2)]
-
-
 def test_mor_pipeline_skip_drains(spark, tmp_path, corpus):
     """Pipeline-skipped rows LEFT the frontier (dropped without
     retry, producer/ets.ex:150): under MOR commits the tombstone must
@@ -427,14 +321,12 @@ def test_mor_pipeline_skip_drains(spark, tmp_path, corpus):
 
     mor = run("mor")
     full = run("full")
-    sharded = run("sharded")
-    # all three layouts agree on every epoch's (scheduled, size) AND
-    # the final frontier keys — before the fix, MOR/sharded kept
-    # skipped rows alive (sizes diverged within 2 epochs).  (p/1 may
-    # legitimately reappear: parse re-discovers it as a link and
-    # admission re-admits it once — identical under every layout.)
+    # both layouts agree on every epoch's (scheduled, size) AND the
+    # final frontier keys — before the fix, MOR kept skipped rows
+    # alive (sizes diverged within 2 epochs).  (p/1 may legitimately
+    # reappear: parse re-discovers it as a link and admission
+    # re-admits it once — identical under every layout.)
     assert mor == full
-    assert sharded == full
 
 
 def test_resume_mid_mor_chain(spark, tmp_path, corpus):
@@ -487,25 +379,6 @@ def test_resume_mid_mor_chain(spark, tmp_path, corpus):
     assert fr_a == fr_b
 
 
-def test_untouched_shard_files_not_rewritten(spark, tmp_path, corpus):
-    """The actual O(churn) claim: an epoch whose churn misses a shard
-    leaves that shard's newest files untouched on disk (same mtimes,
-    no new epoch-dir entry for it)."""
-    cfg = CrawlConfig(
-        workdir=str(tmp_path / "wd_io"), tokens_per_epoch=5,
-        frontier_mode="sharded", compact_every=0,
-    )
-    job = CrawlJob(spark, cfg, corpus=corpus)
-    job.insert_requests([f"http://h{i}.test/p/0" for i in range(4)])
-    job.step()
-    ep = job.store.last_epoch()
-    d = os.path.join(str(tmp_path / "wd_io"), "frontier", f"e_{ep:05d}")
-    meta = json.load(open(os.path.join(d, SHARD_META)))
-    n_shards_total = cfg.n_host_shards
-    # churn-bounded: the dirty set is a strict subset of all shards
-    assert 0 < len(meta["dirty"]) < n_shards_total
-
-
 def test_compact_snapshot_all_empty_chain(spark, tmp_path):
     """A chain of zero-churn MOR deltas with NO base (a drained or
     never-seeded frontier — exactly what a forced-mor crawl's
@@ -542,7 +415,7 @@ def test_compact_snapshot_all_empty_chain(spark, tmp_path):
     ids=["global-cap", "text-only-deep"],
 )
 def test_crawl_equivalence_matrix(spark, tmp_path, shape):
-    """3-mode whole-crawl equivalence over shapes the base test does
+    """mor/full whole-crawl equivalence over shapes the base test does
     not cover: the global per-epoch cap (MOR drops over-cap rows
     implicitly instead of requeueing them) and a text-only corpus."""
 
@@ -574,41 +447,64 @@ def test_crawl_equivalence_matrix(spark, tmp_path, shape):
         full = run("full")
         assert full[0][0][0] > 0
         assert run("mor") == full
-        assert run("sharded") == full
     finally:
         c.unpersist()
 
 
-def test_frontier_write_rank_equals_antijoin(spark, tmp_path, corpus):
-    """cfg.frontier_write: the anti-join commit (default) is
-    whole-crawl identical to the legacy rank-losers side outputs in
-    both non-MOR modes — {scheduled, losers, delayed, disallowed}
-    partitions the frontier, so keep = NOT disallowed MINUS
-    scheduled."""
+def test_rank_losers_equal_antijoin_keep(spark):
+    """The two full-commit derivations agree row for row on a
+    unique-key frontier: the rank's deferred side output (losers ∪
+    crawl-delay-blocked, plus over-cap rows under a global cap) equals
+    frontier_keep_rows (frontier minus disallowed minus scheduled) —
+    {scheduled, losers, delayed, disallowed} partitions the frontier.
+    This is what lets dedup-on crawls skip the full-frontier rank."""
+    from spider_man_spark.builders import build_requests
+    from spider_man_spark.functions.urls import canonicalize_frontier
+    from spider_man_spark.operators.politeness import (
+        frontier_keep_rows,
+        schedule_epoch,
+    )
 
-    def run(write, mode):
-        cfg = CrawlConfig(
-            workdir=str(tmp_path / f"wd_{write}_{mode}"),
-            tokens_per_epoch=20, frontier_mode=mode,
-            frontier_write=write, compact_every=3,
-        )
-        job = CrawlJob(spark, cfg, corpus=corpus)
-        job.insert_requests([f"http://h{i}.test/p/0" for i in range(4)])
-        series = []
-        for _ in range(6):
-            r = job.step()
-            series.append((r.scheduled, r.frontier_size))
-        ep = job.store.last_epoch()
-        fr = job.store.read_snapshot("frontier", ep, FRONTIER_SCHEMA)
-        rows = sorted(
-            (r.url_key, r.depth, r.retries) for r in fr.collect()
-        )
-        return series, rows
+    urls = (
+        [f"http://a.io/p/{i}" for i in range(8)]  # 3 tokens: 5 losers
+        + ["http://a.io/private/x"]  # robots-disallowed
+        + [f"http://b.io/p/{i}" for i in range(3)]  # crawl-delay-blocked
+        + [f"http://c.io/p/{i}" for i in range(2)]  # no robots row
+    )
+    frontier = canonicalize_frontier(
+        spark.createDataFrame(build_requests(urls), FRONTIER_SCHEMA),
+        n_shards=8,
+    )
+    robots = spark.createDataFrame(
+        [("a.io", 0, 3, 0, ["/private"], 0),
+         ("b.io", 5000, 3, 10_000, None, 0)],
+        "host string, crawl_delay_ms int, tokens_per_epoch int, "
+        "next_allowed_ts long, disallow_prefixes array<string>, epoch int",
+    )
+    cols = [f.name for f in FRONTIER_SCHEMA.fields]
 
-    for mode in ("full", "sharded"):
-        got = run("antijoin", mode)
-        assert got[0][0][0] > 0
-        assert got == run("rank", mode)
+    def rows(df):
+        return sorted(df.select(*cols).collect(), key=lambda r: r.url_key)
+
+    # without and with a global cap (over-cap rows join the losers)
+    for max_per_epoch, n_sched in ((0, 5), (4, 4)):
+        scheduled, deferred, disallowed = schedule_epoch(
+            frontier, robots, 1000, tokens_default=3,
+            max_per_epoch=max_per_epoch, need_losers=True,
+        )
+        keep = frontier_keep_rows(
+            frontier, robots, scheduled.select("url_key")
+        )
+        got = rows(deferred)
+        assert got == rows(keep)
+        keys = {r.url_key for r in got}
+        assert "http://a.io/private/x" not in keys
+        assert {f"http://b.io/p/{i}" for i in range(3)} <= keys
+        assert [r.url_key for r in disallowed.collect()] == [
+            "http://a.io/private/x"
+        ]
+        assert scheduled.count() == n_sched
+        assert len(keys) + n_sched + 1 == len(urls)
 
 
 def test_frontier_keep_rows_plan_is_map_side(spark):
@@ -632,57 +528,57 @@ def test_frontier_keep_rows_plan_is_map_side(spark):
 def test_dedup_off_falls_back_to_rank_commit(spark, tmp_path):
     """dedup=False frontiers can hold duplicate url_keys; the
     anti-join commit would drop every copy of a scheduled key, so the
-    engine must fall back to the rank-losers commit (empirically, the
-    default anti-join once diverged here: duplicate copies vanished
-    unfetched).  Whole-crawl series must match an explicit
-    frontier_write="rank" run exactly."""
+    engine falls back to the rank-losers commit (empirically, the
+    anti-join once diverged here: duplicate copies vanished
+    unfetched).  The per-epoch series is pinned to what the rank
+    commit produced when both derivations were still selectable."""
     c = make_corpus(
         spark, n_hosts=2, pages_per_host=6, out_degree=2,
         images_per_host=1,
     ).cache()
     try:
-        def run(**kw):
-            cfg = CrawlConfig(
-                workdir=str(tmp_path / f"wd_ddoff_{len(kw)}"),
-                tokens_per_epoch=2, dedup=False, frontier_mode="full",
-                **kw,
-            )
-            job = CrawlJob(spark, cfg, corpus=c)
-            job.insert_requests(
-                ["http://h0.test/p/0", "http://h1.test/p/0"]
-            )
-            series = []
-            for _ in range(5):
-                r = job.step()
-                series.append((r.scheduled, r.frontier_size))
-            ep = job.store.last_epoch()
-            fr = job.store.read_snapshot("frontier", ep, FRONTIER_SCHEMA)
-            n_dups = fr.count() - fr.select("url_key").distinct().count()
-            return series, n_dups
-
-        default = run()
-        legacy = run(frontier_write="rank")
-        assert default == legacy
+        cfg = CrawlConfig(
+            workdir=str(tmp_path / "wd_ddoff"),
+            tokens_per_epoch=2, dedup=False, frontier_mode="full",
+        )
+        job = CrawlJob(spark, cfg, corpus=c)
+        job.insert_requests(["http://h0.test/p/0", "http://h1.test/p/0"])
+        series = []
+        for _ in range(5):
+            r = job.step()
+            series.append((r.scheduled, r.frontier_size))
+        ep = job.store.last_epoch()
+        fr = job.store.read_snapshot("frontier", ep, FRONTIER_SCHEMA)
+        n_dups = fr.count() - fr.select("url_key").distinct().count()
+        assert series == [(2, 8), (4, 12), (4, 17), (4, 13), (4, 20)]
         # duplicate url_keys actually arise in this shape — the
         # fallback is load-bearing, not vacuous
-        assert default[1] > 0
+        assert n_dups == 6
     finally:
         c.unpersist()
 
 
-def test_frontier_write_auto_resolution():
-    """frontier_write="auto" (default): anti-join below
-    frontier_mor_min_rows, rank at/above it, anti-join when the size
-    is unknown; explicit values pass through untouched."""
-    from spider_man_spark.plans.epoch import _resolve_frontier_write
-
-    cfg = CrawlConfig(workdir="/tmp/x")  # never touched
-    assert cfg.frontier_write == "auto"
-    assert _resolve_frontier_write(cfg, None) == "antijoin"
-    assert _resolve_frontier_write(cfg, cfg.frontier_mor_min_rows - 1) \
-        == "antijoin"
-    assert _resolve_frontier_write(cfg, cfg.frontier_mor_min_rows) == "rank"
-    cfg.frontier_write = "rank"
-    assert _resolve_frontier_write(cfg, 1) == "rank"
-    cfg.frontier_write = "antijoin"
-    assert _resolve_frontier_write(cfg, 10**10) == "antijoin"
+def test_seed_records_size_and_tunes_epoch_one(spark, tmp_path, corpus):
+    """The seed insert records the frontier size in the manifest (a
+    fresh frontier is the n admitted rows; a later insert adds its n),
+    so the first step() already sizes the shuffle width from it."""
+    cfg = CrawlConfig(workdir=str(tmp_path / "wd_seed"), tokens_per_epoch=5)
+    job = CrawlJob(spark, cfg, corpus=corpus)
+    assert job.insert_requests(
+        [f"http://h{i}.test/p/0" for i in range(3)]
+    ) == 3
+    assert job.store.manifest()["frontier_size"] == 3
+    # one new key, one already seen
+    assert job.insert_requests(
+        ["http://h3.test/p/0", "http://h0.test/p/0"]
+    ) == 1
+    assert job.store.manifest()["frontier_size"] == 4
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "4")
+        job.step()
+        # max(8, 4 // 50_000): tuned, not the session's 4
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, before)

@@ -260,6 +260,44 @@ def test_flag_roundtrip_through_fetch(spark):
     assert out[0].status == 200
 
 
+def test_stub_fetch_unpersisted_input_stays_lazy(spark):
+    """stub_fetch counts the scheduled slice (to pick the broadcast
+    split) only when it is persisted: an unpersisted input takes the
+    shuffled-hash plan, and building that plan starts no Spark job.
+    Both paths return the same rows, in-corpus and not-in-corpus."""
+    from spider_man_spark.sources.fetch import stub_fetch
+    from spider_man_spark.schemas import CORPUS_SCHEMA
+
+    sched = _frontier(
+        spark, ["http://a.io/x", "http://a.io/y", "http://a.io/missing"]
+    )
+    corpus = spark.createDataFrame(
+        [(u, "a.io", 200, "text/html", bytearray(b"<html/>"), [], None, 0,
+          None) for u in ("http://a.io/x", "http://a.io/y")],
+        CORPUS_SCHEMA,
+    )
+    sc = spark.sparkContext
+    group = "stub-fetch-lazy"
+    sc.setJobGroup(group, "plan build only")
+    try:
+        lazy = stub_fetch(sched, corpus)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    def rows(df):
+        return sorted(df.collect(), key=lambda r: r.url_key)
+
+    persisted = sched.persist()
+    try:
+        got = rows(lazy)
+        assert got == rows(stub_fetch(persisted, corpus))
+        assert [r.status for r in got] == [0, 200, 200]
+    finally:
+        persisted.unpersist()
+
+
 def test_robots_disallow_and_global_cap(spark):
     """Disallow-prefix filtering + the max_per_epoch global cap (the
     GenStage demand analogue) in schedule_epoch."""

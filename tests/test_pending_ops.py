@@ -159,9 +159,9 @@ def test_mor_epoch_tag_six_digits(spark, tmp_path):
 
 
 def test_leftover_tmp_dirs_cleaned(spark, tmp_path):
-    """__shtmp leftovers (interrupted sharded build) are deleted, never
-    rolled forward; a non-numeric e_* leftover must not crash
-    prune_beyond."""
+    """__shtmp leftovers (an older build's interrupted shard-selective
+    write) are deleted, never rolled forward; a non-numeric e_*
+    leftover must not crash prune_beyond."""
     wd = str(tmp_path / "wd")
     store = StateStore(spark, wd)
     store.write("frontier", _frontier_df(spark, [("a0", 0)]), 0)

@@ -4,6 +4,7 @@ requester/requester.ex:51-54."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from spider_man_spark.builders import build_requests
@@ -67,6 +68,17 @@ def test_canonicalize_frontier_derives_all(spark):
     ).first()
     assert out2.url_key == "custom-key"
     assert out2.url == "http://h.io/b"
+
+
+def test_canonicalize_frontier_rejects_temp_column_clash(spark):
+    """A caller column named like one of the pass's temp columns would
+    be overwritten and dropped; the pass refuses it by name instead."""
+    rows = build_requests(["http://h.io/a"])
+    df = spark.createDataFrame(rows, FRONTIER_SCHEMA).withColumn(
+        "__path", F.lit("mine")
+    )
+    with pytest.raises(ValueError, match="__path"):
+        canonicalize_frontier(df)
 
 
 def test_ua_select_deterministic_and_in_list(spark):
